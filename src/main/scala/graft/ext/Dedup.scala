@@ -550,12 +550,15 @@ object Dedup {
         .write.format("noop").mode("overwrite").save()
       // strict on the metric's runtime type: silently defaulting a
       // mis-typed value to ZERO would fake instant convergence and
-      // ship wrong labels — fail loudly instead. A genuinely absent
-      // sum (empty graph) is the old head().get(0) == null case.
+      // ship wrong labels — fail loudly instead. A null sum (empty
+      // graph) is the old head().get(0) == null case; a missing key
+      // means the metric was not observed at all, so it fails too.
       val s = obs.get.get("s") match {
         case Some(d: java.math.BigDecimal) => d
         case Some(d: scala.math.BigDecimal) => d.bigDecimal
-        case None | Some(null) => java.math.BigDecimal.ZERO
+        case Some(null) => java.math.BigDecimal.ZERO
+        case None => throw new IllegalStateException(
+          "convergence metric s missing from the observation")
         case Some(other) => throw new IllegalStateException(
           s"convergence metric has unexpected type ${other.getClass}")
       }

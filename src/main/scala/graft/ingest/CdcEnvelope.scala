@@ -22,23 +22,30 @@ import org.apache.spark.sql.types.StructType
 object CdcEnvelope {
 
   /** F1: parse a Kafka-shaped frame (`value: binary|string`) into the
-    * flattened Debezium envelope for one source table. PERMISSIVE mode maps
-    * malformed records to all-null rows (then dropped by [[valid]]). */
+    * flattened Debezium envelope `schema`. PERMISSIVE mode maps malformed
+    * records to all-null rows (then dropped by [[valid]]).
+    *
+    * The struct is flattened by `inline`, not by a projection: Catalyst
+    * pushes a filter beneath a projection by copying its expressions, so
+    * the gates would run `from_json` a second time for every frame they
+    * admit. No filter crosses a generator's output. */
   def parse(raw: DataFrame, schema: StructType): DataFrame =
-    raw
-      .select(
-        from_json(
-          col("value").cast("string"),
-          schema,
-          Map("mode" -> "PERMISSIVE")).as("r"))
-      .select(col("r.*"))
+    raw.select(inline(array(
+      from_json(col("value").cast("string"), schema, Map("mode" -> "PERMISSIVE")))))
 
-  /** F1 for a multiplexed stream: parse all four table schemas and keep the
-    * branch named by `__source_table`. */
+  /** F1 for one table: parse with that table's schema and keep the frames
+    * whose `__source_table` names it. The per-table path; the multiplexed
+    * stream parses each frame once with [[parseEnvelope]] instead. */
   def parseTable(raw: DataFrame, table: String): DataFrame = {
     val schema = Schemas.cdcSchemas(table)
     parse(raw, schema).where(col("__source_table") === table)
   }
+
+  /** F1 for a multiplexed stream: parse each frame once with the merged
+    * envelope of all four tables ([[Schemas.cdcEnvelope]]), whatever its
+    * `__source_table`. A field of another table that is mistyped in a
+    * frame reads null; the frame's own fields still parse. */
+  def parseEnvelope(raw: DataFrame): DataFrame = parse(raw, Schemas.cdcEnvelope)
 
   /** F2: validity gate — the three required meta-fields must be present
     * (reference: strategy.py:12-18). */

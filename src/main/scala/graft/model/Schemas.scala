@@ -79,6 +79,26 @@ object Schemas {
     "followers" -> followersCdc
   )
 
+  /** Union of `schemas` by field name, first occurrence first. Fails fast
+    * when two schemas give one field name different types: one envelope
+    * could not parse both tables' frames faithfully. */
+  def merged(schemas: Seq[StructType]): StructType = {
+    val fields = schemas.flatMap(_.fields)
+    fields.groupBy(_.name).foreach { case (name, fs) =>
+      val types = fs.map(_.dataType).distinct
+      require(types.size == 1,
+        s"field $name has conflicting types across CDC tables: ${types.mkString(", ")}")
+    }
+    StructType(fields.distinctBy(_.name))
+  }
+
+  /** One envelope for the multiplexed frame stream: every table's fields
+    * plus the meta-fields, so each frame is parsed once whatever its
+    * `__source_table` (reference: one `json.loads` per message,
+    * event_processor.py:63). */
+  val cdcEnvelope: StructType =
+    merged(Seq(likesCdc, commentsCdc, shardsCdc, followersCdc))
+
   /** Uniform activity record, the engine's one typed IR
     * (reference: config.py:18-25 CassandraRecord; sink DDL
     * cassandra-init.cql:6-15). `event_timestamp` is a proper timestamp

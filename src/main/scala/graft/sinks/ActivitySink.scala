@@ -22,10 +22,16 @@ import org.apache.spark.storage.StorageLevel
   *    count (N, not |users|), which is what survives 100 TB / 1000
   *    executors. (Spark's `bucketBy` would also give bucket pruning but
   *    requires a metastore table; the directory form works on any path.)
-  *  - '''clustering order''': `sortWithinPartitions(user_id,
-  *    event_timestamp desc, activity_pk desc)` reproduces the CQL
-  *    clustering order inside every parquet file, so per-user pages are
-  *    contiguous row-group ranges and min/max stats stay tight.
+  *  - '''clustering order, requested but not delivered''': [[write]]
+  *    asks for `sortWithinPartitions(user_id, event_timestamp desc,
+  *    activity_pk desc)`, the CQL clustering order. Spark's planned write
+  *    (`spark.sql.optimizer.plannedWrite.enabled`, on by default) sorts
+  *    each write task by the partition column `user_bucket` alone, and
+  *    that sort replaces the requested one, so the rows of a file are not
+  *    in clustering order. Results do not depend on it: every feed read
+  *    orders its rows itself ([[graft.serve.FeedQueries]]). Prefixing the
+  *    sort with `user_bucket` would restore the order, at about 6 % more
+  *    bytes per event; that trade is still open.
   *
   * [[materialized]] builds the table once per fixture dir (then reuses it),
   * and persists the read-back DataFrame — the engine-scoped substitution for
@@ -40,15 +46,15 @@ object ActivitySink {
   private def clusteringSort = Seq(
     col("user_id"), col("event_timestamp").desc, col("activity_pk").desc)
 
-  /** Write the canonical activity table: bucket-partitioned directories,
-    * clustering-sorted files ([[BucketedSink]] with the CQL clustering
-    * policy). */
+  /** Write the canonical activity table: bucket-partitioned directories
+    * ([[BucketedSink]] with the CQL clustering sort, which the planned
+    * write overrides; see above). */
   def write(activity: DataFrame, path: String, buckets: Int = defaultBuckets): Unit =
     BucketedSink.write(activity, path, col("user_id"), "user_bucket",
       buckets, clusteringSort, "overwrite")
 
   /** Append one micro-batch into the same layout (streaming K1). Each
-    * batch adds clustering-sorted files under the bucket directories; a
+    * batch adds files under the bucket directories; a
     * periodic compaction (re-running [[write]] over the accumulated
     * table) restores one-file-per-bucket when batch counts grow. */
   def appendBatch(activity: DataFrame, path: String, buckets: Int = defaultBuckets): Unit =

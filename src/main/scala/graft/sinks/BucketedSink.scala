@@ -6,14 +6,18 @@ import org.apache.spark.sql.functions._
 /** The shared hash-bucketed serving-layout machinery behind
   * [[ActivitySink]] (CDC tier, K1) and [[CorpusSink]] (corpus tier):
   * `pmod(hash(key), N)` directory partitioning (bounded directory count —
-  * what survives 100 TB / 1000 executors), clustering-sorted files,
-  * marker-fenced streaming appends, and the small-file compaction pass.
+  * what survives 100 TB / 1000 executors), marker-fenced streaming
+  * appends, and the small-file compaction pass.
   * Each tier keeps its own key/sort/column-name policy; the write/append/
   * run/compact mechanics live once, here. */
 private[sinks] object BucketedSink {
 
   /** Write `df` partitioned into `bucketCol = pmod(hash(key), buckets)`
-    * directories, each file sorted by `sortCols`. */
+    * directories. `sortCols` does not reach the files: Spark's planned
+    * write (`spark.sql.optimizer.plannedWrite.enabled`, on by default)
+    * sorts each write task by `bucketCol` alone, and that sort replaces
+    * the `sortWithinPartitions` below, so rows within a file follow no
+    * `sortCols` order. */
   def write(
       df: DataFrame,
       path: String,

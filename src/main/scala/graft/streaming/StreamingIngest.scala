@@ -9,10 +9,15 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * event_processor.py:45-79 — poll → parse → transform → sink — re-expressed
   * as one streaming plan).
   *
-  * The plan is identical to the batch [[graft.ingest.Pipeline]]: the four
-  * envelope branches are parsed from the multiplexed `value` stream
-  * (≙ one consumer over 4 Kafka topics, services/kafka.py:8-26), gated
-  * (F2+F3), projected (P1-P4) and unioned. In production the source is
+  * The plan is one pass over the multiplexed `value` stream (≙ one
+  * consumer over 4 Kafka topics, services/kafka.py:8-26): each frame is
+  * parsed once with the merged envelope of all four tables, gated once
+  * (F2+F3), kept only if `__source_table` names a known table, and
+  * projected (P1-P4) by a single projection that picks each column's
+  * mapping by `__source_table`. Its rows and schema equal those of the
+  * per-table union the batch [[graft.ingest.Pipeline]] builds (each table
+  * parsed, gated and projected by its typed adapter); StreamingSpec pins
+  * this on mixed frames. In production the source is
   * `spark.readStream.format("kafka")`; in this environment tests bind the
   * same plan to `MemoryStream[String]` — the plan does not change, only the
   * source.
@@ -62,12 +67,10 @@ object StreamingIngest {
     activityStream(kafkaStream(spark, servers))
 
   /** Raw `value:string` stream (Kafka frame shape) → uniform activity
-    * stream. Works on batch and streaming DataFrames alike. */
+    * stream, scanning and parsing each frame once. Works on batch and
+    * streaming DataFrames alike. */
   def activityStream(raw: DataFrame): DataFrame =
-    tables
-      .map { t => Adapters.bySourceTable(t)(
-        CdcEnvelope.admitted(CdcEnvelope.parseTable(raw, t))) }
-      .reduce(_ unionByName _)
+    Adapters.multiplexed(CdcEnvelope.admitted(CdcEnvelope.parseEnvelope(raw)))
 
   /** Effectively-once variant: watermark + dedup on the deterministic
     * event key before the sink. */

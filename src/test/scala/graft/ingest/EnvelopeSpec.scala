@@ -1,6 +1,8 @@
 package graft.ingest
 
 import graft.SparkSuite
+import graft.model.Schemas
+import org.apache.spark.sql.types._
 
 /** F1/F2/F3 gate semantics, including the malformed-JSON skip-and-continue
   * path (≙ reference event_processor.py:75-77, strategy.py:12-18). */
@@ -41,5 +43,19 @@ class EnvelopeSpec extends SparkSuite {
     assert(parsed.count() === 1)                    // it arrives
     assert(parsed.where("__deleted = 'true'").count() === 1)
     assert(CdcEnvelope.admitted(parsed).count() === 0) // it never passes
+  }
+
+  test("merged envelope: every table's fields with their own types") {
+    for ((table, schema) <- Schemas.cdcSchemas; f <- schema.fields)
+      assert(Schemas.cdcEnvelope(f.name).dataType === f.dataType, s"$table.${f.name}")
+    assert(Schemas.cdcEnvelope.fieldNames.toSet ===
+      Schemas.cdcSchemas.values.flatMap(_.fieldNames).toSet)
+  }
+
+  test("merged envelope fails fast when two tables type one field differently") {
+    val e = intercept[IllegalArgumentException](Schemas.merged(Seq(
+      StructType(Seq(StructField("shard_id", LongType))),
+      StructType(Seq(StructField("shard_id", StringType))))))
+    assert(e.getMessage.contains("shard_id"))
   }
 }

@@ -1,7 +1,11 @@
 package graft.streaming
 
 import graft.SparkSuite
+import graft.ingest.{Adapters, CdcEnvelope}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.JsonToStructs
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.Trigger
 
 /** Streaming parity (SURVEY.md §2.9): the batch plan bound to MemoryStream,
   * checkpointed parquet sink, and the replay-twice proof that watermarked
@@ -110,6 +114,59 @@ class StreamingSpec extends SparkSuite {
     val res = spark.read.parquet(out)
     assert(res.count() === 5)
     assert(res.dropDuplicates("activity_type", "activity_pk").count() === 5)
+  }
+
+  /** Every frame shape the one-pass plan must treat as the per-table
+    * union does: the four tables, `u`/`d` ops, truncated JSON, JSON
+    * without `__op`, an unknown `__source_table`, and a followers frame
+    * whose likes/comments field `shard_id` is mistyped. */
+  private val mixed = events ++ Seq(
+    """{"id":5,"message":"gone","user_id":"3","shard_id":3,"__op":"d","__table":"comments","__source_ts_ms":1752228250000,"__source_table":"comments","__deleted":"true"}""",
+    """{"id":9,"shard_id":3,"liked_by":"2","__op":"c","__tab""",
+    """{"id":10,"shard_id":3,"liked_by":"4","__table":"likes","__source_ts_ms":1752228260000,"__source_table":"likes"}""",
+    """{"id":11,"user_id":"2","__op":"c","__table":"reposts","__source_ts_ms":1752228270000,"__source_table":"reposts"}""",
+    """{"id":12,"follower_id":"3","following_id":"2","shard_id":"abc","__op":"c","__table":"followers","__source_ts_ms":1752228280000,"__source_table":"followers"}""")
+
+  /** The plan the one-pass stream replaces: each table parsed with its own
+    * schema, gated and projected by its typed adapter, then unioned. */
+  private def perTableUnion(raw: DataFrame): DataFrame =
+    Seq(
+      Adapters.likes(CdcEnvelope.admitted(CdcEnvelope.parseTable(raw, "likes"))),
+      Adapters.comments(CdcEnvelope.admitted(CdcEnvelope.parseTable(raw, "comments"))),
+      Adapters.shards(CdcEnvelope.admitted(CdcEnvelope.parseTable(raw, "shards"))),
+      Adapters.followers(CdcEnvelope.admitted(CdcEnvelope.parseTable(raw, "followers"))))
+      .reduce(_ unionByName _)
+
+  private def sorted(rows: Array[Row]): Seq[Row] =
+    rows.toSeq.sortBy(r => (r.getAs[String]("activity_type"), r.getAs[Long]("activity_pk")))
+
+  test("one-pass activityStream equals the per-table union over mixed frames") {
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[String]
+    mem.addData(mixed: _*)
+    val stream = StreamingIngest.activityStream(mem.toDF())
+    assert(stream.schema === perTableUnion(mem.toDF()).schema)
+    val q = stream.writeStream.format("memory").queryName("one_pass_activity")
+      .outputMode("append").trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    val got = sorted(spark.table("one_pass_activity").collect())
+    val want = sorted(perTableUnion(mixed.toDF("value")).collect())
+    assert(got === want)
+    // 4 creates + the follow whose foreign field is mistyped
+    assert(got.map(_.getAs[Long]("activity_pk")) === Seq(4L, 6L, 2L, 12L, 7L))
+    val follow = got.find(_.getAs[Long]("activity_pk") == 12L).get
+    assert(follow.getAs[String]("user_id") === "3")
+    assert(follow.getAs[String]("target_id") === "2")
+    // the source is scanned once: one input row per frame
+    assert(q.recentProgress.map(_.numInputRows).sum === mixed.size.toLong)
+  }
+
+  test("one-pass activityStream parses each frame once") {
+    // an RDD source, so the optimizer cannot fold the plan into a relation
+    val raw = spark.sparkContext.parallelize(mixed).toDF("value")
+    val plan = StreamingIngest.activityStream(raw).queryExecution.executedPlan
+    val parses = plan.flatMap(_.expressions.flatMap(_.collect { case j: JsonToStructs => j }))
+    assert(parses.size === 1)
   }
 
   test("kafka binding is compiled in-tree and reaches source resolution") {
