@@ -1,6 +1,8 @@
 package graft.serve
 
-import org.apache.spark.sql.DataFrame
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -17,10 +19,14 @@ import org.apache.spark.sql.functions._
   * }}}
   *
   * The reference executes this as two hops (Postgres IN-list then Cassandra
-  * multi-partition scan, main.py:149-168). Here it is a single broadcast
-  * left-semi equi-join: the followee list is tiny (one user's follow set) so
-  * Catalyst broadcasts it — the Spark analog of the reference's client-side
-  * IN-list, with the `user_id` predicate pushed into the parquet scan.
+  * multi-partition scan, main.py:149-168), and so does this object: the
+  * followee list is resolved once, on the driver ([[followeesOf]]: one
+  * pushed-down scan of the follow table, no shuffle), and the page is one
+  * scan of the activity table under `user_id IN (list)`. One user's follow
+  * set is small, so the list travels in the plan as literals; there is no
+  * join, no exchange and no broadcast, and the predicate pushes into the
+  * parquet scan (and, for the materialized table, its bucket directories
+  * prune the scan first).
   *
   * Deviation from the reference, on purpose (SURVEY.md §2.10 item 2): CQL has
   * no OFFSET and no defined cross-partition order for IN queries — the
@@ -37,13 +43,30 @@ import org.apache.spark.sql.functions._
 object FeedQueries {
 
   /** Followee set of `uid` — live follow edges only (creates; the reference
-    * never materializes unfollows, SURVEY.md §2.10 item 1).
+    * never materializes unfollows, SURVEY.md §2.10 item 1), as a local
+    * DataFrame of `user_id`. One job: a scan with `follower_id = uid`
+    * pushed down; null ids and duplicates are dropped on the driver, so
+    * there is no shuffle, and later reads of the result run no job at all.
     * (reference: main.py:149-154, S2) */
-  def followeesOf(followers: DataFrame, uid: String): DataFrame =
-    followers
+  def followeesOf(followers: DataFrame, uid: String): DataFrame = {
+    val edges = followers
       .where(col("follower_id") === uid)
       .select(col("following_id").as("user_id"))
-      .distinct()
+    followers.sparkSession.createDataFrame(
+      edges.collect().filterNot(_.isNullAt(0)).distinct.toSeq.asJava, edges.schema)
+  }
+
+  /** `user_id IN (followee ids)` — the reference's IN-list
+    * (main.py:149-168). A null id matches no row, as in a semi-join; an
+    * empty followee set matches none. */
+  private def byFollowees(followees: DataFrame): Column =
+    col("user_id").isin(
+      followees.select("user_id").collect().map(_.get(0)).filter(_ != null): _*)
+
+  /** The feed filter as one step, for callers holding the follow table:
+    * the activities of the users `uid` follows, unordered. */
+  def followedActivity(activity: DataFrame, followers: DataFrame, uid: String): DataFrame =
+    activity.where(byFollowees(followeesOf(followers, uid)))
 
   /** The flagship feed page: activities of the users `uid` follows, newest
     * first. (reference: main.py:136-189, J1+T1+T2) */
@@ -53,8 +76,7 @@ object FeedQueries {
       uid: String,
       limit: Int,
       offset: Int = 0): DataFrame = {
-    val page = activity
-      .join(broadcast(followeesOf(followers, uid)), Seq("user_id"), "left_semi")
+    val page = followedActivity(activity, followers, uid)
       .orderBy(col("event_timestamp").desc, col("activity_pk").desc)
     (if (offset > 0) page.offset(offset) else page).limit(limit)
   }
@@ -70,8 +92,7 @@ object FeedQueries {
       lastPk: Long,
       limit: Int): DataFrame = {
     val cursorTs = timestamp_millis(lit(lastTsMillis))
-    activity
-      .join(broadcast(followeesOf(followers, uid)), Seq("user_id"), "left_semi")
+    followedActivity(activity, followers, uid)
       .where(
         col("event_timestamp") < cursorTs ||
           (col("event_timestamp") === cursorTs && col("activity_pk") < lastPk))
@@ -152,7 +173,7 @@ object FeedQueries {
   /** Feed page over the materialized activity table (K1 read path): prune
     * to the followees' hash-bucket directories first — at 100 TB this is
     * the difference between scanning |followees|/N of the table and all of
-    * it — then the same broadcast semi-join + top-k. */
+    * it — then the same followee IN-list filter + top-k, all in one scan. */
   def feedPageMaterialized(
       activityTable: DataFrame,
       followeeBuckets: Seq[Int],
@@ -160,8 +181,7 @@ object FeedQueries {
       limit: Int,
       offset: Int = 0): DataFrame = {
     val page = activityTable
-      .where(col("user_bucket").isin(followeeBuckets: _*))
-      .join(broadcast(followees), Seq("user_id"), "left_semi")
+      .where(col("user_bucket").isin(followeeBuckets: _*) && byFollowees(followees))
       .orderBy(col("event_timestamp").desc, col("activity_pk").desc)
     (if (offset > 0) page.offset(offset) else page).limit(limit)
   }

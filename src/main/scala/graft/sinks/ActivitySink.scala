@@ -88,15 +88,17 @@ object ActivitySink {
     spark.read.parquet(path)
 
   /** Bucket ids of a (small) keyed DataFrame of `user_id` — used to prune
-    * the feed scan to the followees' partitions. The collect is the API-edge
-    * equivalent of the reference's client-side IN-list (main.py:149-154):
-    * at most `buckets` small ints, never data-sized. */
+    * the feed scan to the followees' partitions. The keys are one user's
+    * followee set (the local DataFrame [[graft.serve.FeedQueries.followeesOf]]
+    * returns, on which the projection folds and no job runs): |keys| small
+    * ints are collected and deduplicated on the driver, the API-edge
+    * equivalent of the reference's client-side IN-list (main.py:149-154). */
   def bucketsOf(keys: DataFrame, buckets: Int = defaultBuckets): Seq[Int] =
     keys
-      .select(pmod(hash(col("user_id")), lit(buckets)).as("b"))
-      .distinct()
+      .select(pmod(hash(col("user_id")), lit(buckets)))
       .collect()
       .map(_.getInt(0))
+      .distinct
       .toSeq
 
   // One materialization per fixture dir per JVM; the table itself is

@@ -10,11 +10,11 @@ class PlanShapeSpec extends SparkSuite {
 
   private val d = "/root/testdata/sf0.001"
 
-  private def plan(q: String): String = {
-    val df = SparkEntry.queries(q)(spark, d)
+  private def plan(q: String): String = explain(SparkEntry.queries(q)(spark, d))
+
+  private def explain(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.explainString(
       org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-  }
 
   /** Number of distinct physical nodes named `op` in a FORMATTED explain.
     * Formatted mode prints every operator twice — `Op (n)` in the tree and
@@ -65,10 +65,61 @@ class PlanShapeSpec extends SparkSuite {
     assert(p.contains("WindowGroupLimit"))
   }
 
-  test("feed_page: semi-join on broadcast followee list") {
-    val p = plan("feed_page")
-    assert(p.contains("LeftSemi"))
-    assert(p.contains("BroadcastExchange"))
+  /** The value columns of every `In`/`InSet` in the plan's Filter nodes,
+    * before adaptive execution rewrites the plan. */
+  private def inListColumns(df: org.apache.spark.sql.DataFrame): Seq[Set[String]] = {
+    import org.apache.spark.sql.catalyst.expressions.{In, InSet}
+    df.queryExecution.sparkPlan.collect {
+      case f: org.apache.spark.sql.execution.FilterExec => f.condition.collect {
+        case i: In => i.value.references.map(_.name).toSet
+        case i: InSet => i.child.references.map(_.name).toSet
+      }
+    }.flatten
+  }
+
+  test("feed_page: each adapter branch filters on the followee IN-list; no semi-join") {
+    val df = SparkEntry.queries("feed_page")(spark, d)
+    val p = explain(df)
+    // one IN-list filter per adapter branch of the activity union, each on
+    // that branch's user_id source column
+    val ins = inListColumns(df)
+    assert(ins.count(_ == Set("user_id")) === 4, s"IN-lists: $ins")
+    assert(!p.contains("LeftSemi"))
+    Seq("BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin").foreach(j =>
+      assert(nodeCount(p, j) === 0, j))
+    // the one join and broadcast left belong to the follow adapter's
+    // n_users scalar (a cross join), not to the feed filter
+    assert(nodeCount(p, "BroadcastNestedLoopJoin") === 1)
+    assert(p.contains("Join type: Cross"))
+    assert(nodeCount(p, "BroadcastExchange") === 1)
+    assert(!p.contains("HashedRelationBroadcastMode"), "no keyed broadcast")
+  }
+
+  test("feed_page_materialized: one bucket-pruned scan under the followee " +
+      "IN-list; no join, no exchange") {
+    // the page the registry query builds, over a K1 directory rather than
+    // the session-cached table, so the parquet scan and its pruning show
+    val (l, c, sh, f) = graft.sources.CdcSource.all(spark, d)
+    val k1 = tmpDir("graft_plan_k1") + "/activity"
+    graft.sinks.ActivitySink.write(graft.ingest.Pipeline.activity(l, c, sh, f), k1)
+    val followees = graft.serve.FeedQueries.followeesOf(
+      graft.ingest.CdcEnvelope.admitted(f), "1")
+    val page = graft.serve.FeedQueries.feedPageMaterialized(
+      graft.sinks.ActivitySink.read(spark, k1),
+      graft.sinks.ActivitySink.bucketsOf(followees), followees, 50, 10)
+    val scans = page.queryExecution.sparkPlan.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+    }
+    assert(scans.size === 1)
+    assert(scans.head.partitionFilters.exists(
+      _.references.map(_.name).toSet == Set("user_bucket")),
+      s"user_bucket must be a partition filter: ${scans.head.partitionFilters}")
+    assert(inListColumns(page).contains(Set("user_id")))
+    val p = explain(page)
+    assert("""PartitionFilters: \[[^\n]*user_bucket""".r.findFirstIn(p).nonEmpty)
+    assert(nodeCount(p, "Exchange") === 0)
+    assert(nodeCount(p, "BroadcastExchange") === 0)
+    assert(!p.contains("Join"))
   }
 
   test("events_session_attribution: range join plans as equi-join, not BNL") {
